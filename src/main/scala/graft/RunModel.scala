@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.{Checkpoint, Expand, Headline, Pipeline, Rasterize}
 import graft.sql.GraftFunctions._
@@ -28,14 +28,9 @@ object RunModel {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_model_run")
-    val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "32")
-      .config("spark.sql.columnVector.offheap.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Sessions.local(conf = Map(
+      "spark.sql.parquet.columnarReaderBatchSize" -> "32",
+      "spark.sql.columnVector.offheap.enabled" -> "true"))
 
     val spec = Headline.spec
     Headline.ensureTiles(s)

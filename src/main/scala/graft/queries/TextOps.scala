@@ -589,6 +589,12 @@ object TextOps {
           .otherwise(lit(0))
       }.reduce(_ + _).as(s"bk$b")
     }
+    // sig packs one 2-bit field per band into a long, and the
+    // first-band gate below reads field b at bits 2b..2b+1 (its mask
+    // has one bit per field): a retune past 2 planes or 31 bands must
+    // fail here, not silently drop the pairs whose first band is lost
+    require(NdPlanes <= 2 && 2 * NdBands <= 62,
+      s"q59 sig packing: $NdBands bands x $NdPlanes planes do not fit")
     val e = t(s, dir, "embeddings")
       .select(col("vec_id") +: v.as("v") +:
         sqrt(dot_f64(v, v)).as("norm") +: bucketCols: _*)
@@ -623,7 +629,8 @@ object TextOps {
     // the distinct() output) are IDENTICAL — skewJoin produces each
     // (l, r) pair exactly once per band, and the kept band always
     // exists. The q49 brute oracle pins this independently.
-    val evenBits = lit(0x555555555555L)
+    val evenBits =
+      lit((0 until NdBands).map(b => 1L << (2 * b)).reduce(_ | _))
     val x = col("siga").bitwiseXOR(col("sigb"))
     val y = x.bitwiseOR(shiftright(x, 1)).bitwiseAND(evenBits)
     val coll = bitwise_not(y).bitwiseAND(evenBits)
@@ -776,9 +783,9 @@ object TextOps {
     * literal routes through DuckDB's DECIMAL, whose ->DOUBLE conversion
     * double-rounds (1-ulp drift); VARCHAR->DOUBLE is the correctly-
     * rounded parse that round-trips exactly (the q29 finding). */
-  /** Pre-fit placeholder, shared with tools.DumpSql so it can detect a
-    * fit-dependent oracle and run the query before dumping. */
-  private[graft] val PreFitSentinel =
+  /** Pre-fit placeholder: the oracle SQL before q52 has run in this
+    * JVM (tools.VerifyOne prints the SQL after running the query). */
+  private val PreFitSentinel =
     "SELECT 'q52 oracle needs the query to run first (IvfFit)' AS err"
 
   private def q52Sql: String = IvfFit.last match {

@@ -9,12 +9,71 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core.{Cart, Codec, Geom, H3Lite, Polygon}
 
-/** Custom Catalyst expressions for the operators Spark lacks
-  * (SURVEY.md §2.11): tile decode (image bytes -> pixel array) and
-  * ray-cast point-in-polygon. Both are stateless scalar expressions so
-  * they live inside the Tungsten row pipeline; PIP additionally
-  * generates Java code (the hot path of the spatial join).
+/** Custom Catalyst expressions for the per-row kernels Spark lacks
+  * (SURVEY.md §2.11): tile decode, region PIP, the CART vote, raster
+  * stencils, media/audio/text signatures, the GTiff tile encode.
+  *
+  * The contract: each kernel is a plain static method — an `eval` on
+  * the expression's companion object taking the children's values and
+  * then the plan-time constants — and the expression's generated Java
+  * is ONE call of it. The kernel body is compiled Scala, so a kernel of
+  * any size never grows the whole-stage method (Janino's 64 KB limit
+  * silently drops an oversized stage to the interpreted fallback), and
+  * `nullSafeEval` (interpreted mode) calls the very same method, so the
+  * two paths cannot drift apart. [[StaticCall]]'s arity bases emit that
+  * call; a kernel only lists its `constants` in `eval`'s parameter
+  * order.
+  *
+  * Write `doGenCode` by hand only when the generated code must do more
+  * than `value = Companion.eval(children, literals)`: reference a
+  * plan-time object (`ctx.addReferenceObj`: polygon sets, forests,
+  * lookup tables), call a method of another object, cast the result, or
+  * turn a null result into SQL NULL.
   */
+
+/** Renders `<value> = <Companion>$.MODULE$.eval(<children>,
+  * <constants>);` — the companion is derived from the case class's own
+  * name. Constants render as Java literals: Int and Boolean as they
+  * print, Long with `L`, Double with `D`; anything else fails fast. */
+trait StaticCall { self: Expression =>
+
+  /** Plan-time arguments passed after the children's values. Build it
+    * as `Seq[Any](...)`: a plain `Seq(long, int)` widens the Int to a
+    * Long literal, which no longer matches `eval`'s signature. */
+  protected def constants: Seq[Any] = Nil
+
+  protected final def staticCall(ev: ExprCode, args: String*): String = {
+    val literals = constants.map {
+      case v: Long => s"${v}L"
+      case v: Double => s"${v}D"
+      case v @ (_: Int | _: Boolean) => v.toString
+      case v => throw new IllegalArgumentException(
+        s"${getClass.getSimpleName}: no Java literal for constant $v")
+    }
+    val module = getClass.getName + "$.MODULE$"
+    s"${ev.value} = $module.eval(${(args ++ literals).mkString(", ")});"
+  }
+}
+
+abstract class StaticCall1 extends UnaryExpression with StaticCall {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => staticCall(ev, a))
+}
+
+abstract class StaticCall2 extends BinaryExpression with StaticCall {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => staticCall(ev, a, b))
+}
+
+abstract class StaticCall3 extends TernaryExpression with StaticCall {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b, c) => staticCall(ev, a, b, c))
+}
+
+abstract class StaticCall4 extends QuaternaryExpression with StaticCall {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b, c, d) => staticCall(ev, a, b, c, d))
+}
 
 /** Decode one band of a tile payload to array<float>.
   * Children: (bytes: binary, fmt: string). nPixels/band are plan-time
@@ -24,20 +83,14 @@ import graft.core.{Cart, Codec, Geom, H3Lite, Polygon}
   * without materializing whole rasters. */
 case class DecodeBand(left: Expression, right: Expression,
     nPixels: Int, band: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   override def nullSafeEval(bytes: Any, fmt: Any): Any =
     DecodeBand.eval(bytes.asInstanceOf[Array[Byte]],
       fmt.asInstanceOf[UTF8String], nPixels, band)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // one static call so the decode stays inside whole-stage codegen
-    // instead of dropping the span to the interpreted fallback
-    val cls = DecodeBand.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $band);")
-  }
+  override protected def constants = Seq[Any](nPixels, band)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -212,7 +265,7 @@ case class DriverClassifyAt(first: Expression, second: Expression,
   * h); `frameK` is the frame-sampling stride. */
 case class MediaStats(first: Expression, second: Expression,
     third: Expression, fourth: Expression, frameK: Int)
-  extends QuaternaryExpression {
+  extends StaticCall4 {
 
   override def dataType: DataType = StructType(Seq(
     StructField("mean_px", DoubleType, nullable = false),
@@ -225,11 +278,7 @@ case class MediaStats(first: Expression, second: Expression,
       fmt.asInstanceOf[UTF8String], w.asInstanceOf[Int],
       h.asInstanceOf[Int], frameK)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = MediaStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt, w, h) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $w, $h, $frameK);")
-  }
+  override protected def constants = Seq[Any](frameK)
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression,
@@ -266,7 +315,7 @@ object MediaStats {
   * Children: (bytes, fmt); nPixels/frame are plan-time constants. */
 case class FrameStats(left: Expression, right: Expression,
     nPixels: Int, frame: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = StructType(Seq(
     StructField("mean_px", DoubleType, nullable = false),
@@ -277,11 +326,7 @@ case class FrameStats(left: Expression, right: Expression,
     FrameStats.eval(bytes.asInstanceOf[Array[Byte]],
       fmt.asInstanceOf[UTF8String], nPixels, frame)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = FrameStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $frame);")
-  }
+  override protected def constants = Seq[Any](nPixels, frame)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -316,7 +361,7 @@ object FrameStats {
   * Children: (bytes, fmt); nPixels/frame/w/h are plan-time constants. */
 case class FramePhash(left: Expression, right: Expression,
     nPixels: Int, frame: Int, w: Int, h: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = LongType
 
@@ -324,11 +369,7 @@ case class FramePhash(left: Expression, right: Expression,
     FramePhash.eval(bytes.asInstanceOf[Array[Byte]],
       fmt.asInstanceOf[UTF8String], nPixels, frame, w, h)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = FramePhash.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $frame, $w, $h);")
-  }
+  override protected def constants = Seq[Any](nPixels, frame, w, h)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -428,7 +469,7 @@ case class GridH3(child: Expression, rows: Int, cols: Int, res: Int)
   * (q75) instead of only inside the opaque id encode. One static call;
   * stays in whole-stage codegen. */
 case class GridLatLng(child: Expression, rows: Int, cols: Int)
-  extends UnaryExpression {
+  extends StaticCall1 {
 
   override def dataType: DataType = StructType(Seq(
     StructField("lat", DoubleType, nullable = false),
@@ -437,11 +478,7 @@ case class GridLatLng(child: Expression, rows: Int, cols: Int)
   override def nullSafeEval(id: Any): Any =
     GridLatLng.eval(id.asInstanceOf[Long], rows, cols)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = GridLatLng.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = $cls.eval($id, $rows, $cols);")
-  }
+  override protected def constants = Seq[Any](rows, cols)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -488,7 +525,7 @@ case class S2Cell(left: Expression, right: Expression, level: Int)
   * side. Emits array<long> of length 4 in (down, right, up, left)
   * order. */
 case class S2Neighbors(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
+  extends StaticCall1 with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] =
     Seq(LongType)
@@ -496,11 +533,6 @@ case class S2Neighbors(child: Expression)
 
   override def nullSafeEval(id: Any): Any =
     S2Neighbors.eval(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = S2Neighbors.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, id => s"${ev.value} = $cls.eval($id);")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -518,7 +550,7 @@ object S2Neighbors {
   * codegen share S2Parent.eval, which throws on ids coarser than the
   * target level instead of emitting plausible garbage). */
 case class S2Parent(child: Expression, level: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
+  extends StaticCall1 with ImplicitCastInputTypes {
 
   require(level >= 0 && level <= graft.core.S2Lite.MaxLevel,
     s"s2_parent level $level out of [0, ${graft.core.S2Lite.MaxLevel}]")
@@ -534,12 +566,8 @@ case class S2Parent(child: Expression, level: Int)
     S2Parent.eval(id.asInstanceOf[Long],
       graft.core.S2Lite.lsbForLevel(level), level)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = S2Parent.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val lsb = graft.core.S2Lite.lsbForLevel(level)
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = $cls.eval($id, ${lsb}L, $level);")
-  }
+  override protected def constants =
+    Seq[Any](graft.core.S2Lite.lsbForLevel(level), level)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -567,7 +595,7 @@ object S2Parent {
 case class TileEncode(first: Expression, second: Expression,
     third: Expression, nPix: Int, tile: Int, tilesX: Int, gtiff: Boolean,
     cellSize: Double, xMin: Double, yMax: Double)
-  extends TernaryExpression {
+  extends StaticCall3 {
 
   override def dataType: DataType = BinaryType
 
@@ -576,12 +604,8 @@ case class TileEncode(first: Expression, second: Expression,
       vs.asInstanceOf[ArrayData], nPix, tile, tilesX, gtiff, cellSize,
       xMin, yMax)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = TileEncode.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (t, pixs, vs) =>
-      s"${ev.value} = $cls.eval($t, $pixs, $vs, $nPix, $tile, $tilesX, " +
-        s"$gtiff, ${cellSize}D, ${xMin}D, ${yMax}D);")
-  }
+  override protected def constants =
+    Seq[Any](nPix, tile, tilesX, gtiff, cellSize, xMin, yMax)
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Expression =
@@ -620,7 +644,7 @@ object TileEncode {
   * the generated code, with one float[] per tile instead of a lambda
   * frame per output pixel. */
 case class Resize2x(child: Expression, w: Int, h: Int)
-  extends UnaryExpression {
+  extends StaticCall1 {
 
   require(w % 2 == 0 && h % 2 == 0, s"Resize2x needs even dims, got ${w}x$h")
 
@@ -629,11 +653,7 @@ case class Resize2x(child: Expression, w: Int, h: Int)
   override def nullSafeEval(bytes: Any): Any =
     Resize2x.eval(bytes.asInstanceOf[Array[Byte]], w, h)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Resize2x.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $w, $h);")
-  }
+  override protected def constants = Seq[Any](w, h)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -673,18 +693,14 @@ object Resize2x {
   * tile inside whole-stage codegen (the q74-verdict lesson: a real
   * doGenCode expression, not a CodegenFallback transform lambda). */
 case class Upsample2x(child: Expression, w: Int, h: Int)
-  extends UnaryExpression {
+  extends StaticCall1 {
 
   override def dataType: DataType = BinaryType
 
   override def nullSafeEval(bytes: Any): Any =
     Upsample2x.eval(bytes.asInstanceOf[Array[Byte]], w, h)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Upsample2x.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $w, $h);")
-  }
+  override protected def constants = Seq[Any](w, h)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -734,7 +750,7 @@ object Upsample2x {
   * formula read at the permuted index. One static call inside
   * whole-stage codegen, one float[] per tile. */
 case class Mirror(child: Expression, w: Int, h: Int, mode: Int)
-  extends UnaryExpression {
+  extends StaticCall1 {
 
   require(mode >= 0 && mode <= 2, s"Mirror mode must be 0|1|2, got $mode")
 
@@ -743,11 +759,7 @@ case class Mirror(child: Expression, w: Int, h: Int, mode: Int)
   override def nullSafeEval(bytes: Any): Any =
     Mirror.eval(bytes.asInstanceOf[Array[Byte]], w, h, mode)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Mirror.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $w, $h, $mode);")
-  }
+  override protected def constants = Seq[Any](w, h, mode)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -783,18 +795,14 @@ object Mirror {
   * conservative reading for a detector. One pass per edge with early
   * exit, one static call inside whole-stage codegen. */
 case class BorderStats(child: Expression, w: Int, h: Int)
-  extends UnaryExpression {
+  extends StaticCall1 {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
   override def nullSafeEval(bytes: Any): Any =
     BorderStats.eval(bytes.asInstanceOf[Array[Byte]], w, h)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = BorderStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $w, $h);")
-  }
+  override protected def constants = Seq[Any](w, h)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -834,18 +842,14 @@ object BorderStats {
   * zero pixels), the honest reading of "nothing to keep". One static
   * call inside whole-stage codegen, one float[] per image. */
 case class AutoCrop(child: Expression, w: Int, h: Int)
-  extends UnaryExpression {
+  extends StaticCall1 {
 
   override def dataType: DataType = BinaryType
 
   override def nullSafeEval(bytes: Any): Any =
     AutoCrop.eval(bytes.asInstanceOf[Array[Byte]], w, h)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = AutoCrop.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $w, $h);")
-  }
+  override protected def constants = Seq[Any](w, h)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -893,7 +897,7 @@ object AutoCrop {
   * padding) — callers filter those. All-integer outputs so the DuckDB
   * oracle compare is bit-exact. */
 case class Focal3x3(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -901,11 +905,7 @@ case class Focal3x3(left: Expression, right: Expression, tile: Int)
     Focal3x3.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
       tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Focal3x3.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
+  override protected def constants = Seq[Any](tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -980,7 +980,7 @@ object Focal3x3 {
   * and the bias-pack is lossless; all-integer output keeps the DuckDB
   * oracle compare bit-exact. Same patch contract as [[Focal3x3]]. */
 case class Sobel3x3(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -988,11 +988,7 @@ case class Sobel3x3(left: Expression, right: Expression, tile: Int)
     Sobel3x3.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
       tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Sobel3x3.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
+  override protected def constants = Seq[Any](tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1043,7 +1039,7 @@ object Sobel3x3 {
   * callers filter those. Same patch contract as [[Focal3x3]] but with
   * pad 2. */
 case class Harris5x5(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -1051,11 +1047,7 @@ case class Harris5x5(left: Expression, right: Expression, tile: Int)
     Harris5x5.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
       tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Harris5x5.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
+  override protected def constants = Seq[Any](tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1142,7 +1134,7 @@ object Harris5x5 {
   * world support is incomplete (the q98/Harris interior rule). Same
   * patch contract as [[Harris5x5]]. */
 case class Gauss5x5(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -1150,11 +1142,7 @@ case class Gauss5x5(left: Expression, right: Expression, tile: Int)
     Gauss5x5.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
       tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Gauss5x5.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
+  override protected def constants = Seq[Any](tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1206,7 +1194,7 @@ object Gauss5x5 {
   * — O(tiles) output rows, the LapStats shape. Same patch contract as
   * [[Focal3x3]] (pad 1). */
 case class EdgeStats(left: Expression, right: Expression, tile: Int,
-    thr: Int) extends BinaryExpression {
+    thr: Int) extends StaticCall2 {
 
   override def dataType: DataType = StructType(Seq(
     StructField("nx", IntegerType, nullable = false),
@@ -1218,11 +1206,7 @@ case class EdgeStats(left: Expression, right: Expression, tile: Int,
     EdgeStats.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
       tile, thr)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = EdgeStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile, $thr);")
-  }
+  override protected def constants = Seq[Any](tile, thr)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1268,7 +1252,7 @@ object EdgeStats {
   * samples are selected by insertion sort into a stack array — no
   * allocation per pixel. Same patch contract as [[Focal3x3]]. */
 case class Median3x3(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -1276,11 +1260,7 @@ case class Median3x3(left: Expression, right: Expression, tile: Int)
     Median3x3.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
       tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Median3x3.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
+  override protected def constants = Seq[Any](tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1335,7 +1315,7 @@ object Median3x3 {
   * reference's which.max vote pins (W1). Counting is pairwise over the
   * <=9 present samples (no per-pixel histogram allocation). */
 case class Mode3x3(left: Expression, right: Expression, tile: Int, div: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -1343,11 +1323,7 @@ case class Mode3x3(left: Expression, right: Expression, tile: Int, div: Int)
     Mode3x3.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
       tile, div)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Mode3x3.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile, $div);")
-  }
+  override protected def constants = Seq[Any](tile, div)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1510,7 +1486,7 @@ object PaClipArea {
   * edge metrics all start here). All integers; one call per tile, so
   * the counting loop is amortized exactly like ClumpLocal's union-find. */
 case class RunStats(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_runs", IntegerType, nullable = false),
@@ -1521,11 +1497,7 @@ case class RunStats(left: Expression, right: Expression, tile: Int)
     RunStats.eval(pixs.asInstanceOf[ArrayData], clss.asInstanceOf[ArrayData],
       tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = RunStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, clss) =>
-      s"${ev.value} = $cls.eval($pixs, $clss, $tile);")
-  }
+  override protected def constants = Seq[Any](tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1602,7 +1574,7 @@ object RunStats {
   * the decode, zero shuffle beyond the tile scan. */
 case class HaarStats(left: Expression, right: Expression, nPixels: Int,
     band: Int, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
   require(tile % 2 == 0, s"HaarStats needs an even tile, got $tile")
 
   override def dataType: DataType = StructType(Seq(
@@ -1616,11 +1588,7 @@ case class HaarStats(left: Expression, right: Expression, nPixels: Int,
     HaarStats.eval(bytes.asInstanceOf[Array[Byte]],
       fmt.asInstanceOf[UTF8String], nPixels, band, tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = HaarStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $band, $tile);")
-  }
+  override protected def constants = Seq[Any](nPixels, band, tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1671,7 +1639,7 @@ object HaarStats {
   * both levels of the two-level distributed shape (per-partition
   * partial hulls, then the hull of their tiny union). Input must be
   * distinct (collect_set) but need not be sorted. */
-case class ConvexHull(child: Expression) extends UnaryExpression {
+case class ConvexHull(child: Expression) extends StaticCall1 {
 
   override def dataType: DataType = StructType(Seq(
     StructField("area2", LongType, nullable = false),
@@ -1680,11 +1648,6 @@ case class ConvexHull(child: Expression) extends UnaryExpression {
 
   override def nullSafeEval(ps: Any): Any =
     ConvexHull.eval(ps.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = ConvexHull.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, ps => s"${ev.value} = $cls.eval($ps);")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -1754,18 +1717,14 @@ object ConvexHull {
   * out-of-grid cores come back -1 and are filtered. One call per tile
   * patch over the q93 halo-exchange frame. */
 case class Lbp(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def nullSafeEval(pixs: Any, vs: Any): Any =
     Lbp.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData], tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Lbp.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
+  override protected def constants = Seq[Any](tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1820,7 +1779,7 @@ object Lbp {
   * 2^41, denominators <= 2·tile) — no float anywhere, so ties at
   * equidistant parabola crossings are deterministic. */
 case class Edt(left: Expression, right: Expression, tile: Int, thresh: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -1828,11 +1787,7 @@ case class Edt(left: Expression, right: Expression, tile: Int, thresh: Int)
     Edt.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
       tile, thresh)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Edt.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile, $thresh);")
-  }
+  override protected def constants = Seq[Any](tile, thresh)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1930,7 +1885,7 @@ object Edt {
   * O(kept·n) loop is amortized like ClumpLocal's union-find, and n is
   * proposal-count-sized (hundreds), never corpus-sized. */
 case class GreedyNms(child: Expression, thrNum: Int, thrDen: Int)
-  extends UnaryExpression {
+  extends StaticCall1 {
   require(thrNum > 0 && thrDen > 0, "NMS threshold must be positive")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -1938,11 +1893,7 @@ case class GreedyNms(child: Expression, thrNum: Int, thrDen: Int)
   override def nullSafeEval(boxes: Any): Any =
     GreedyNms.eval(boxes.asInstanceOf[ArrayData], thrNum, thrDen)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = GreedyNms.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, boxes =>
-      s"${ev.value} = $cls.eval($boxes, $thrNum, $thrDen);")
-  }
+  override protected def constants = Seq[Any](thrNum, thrDen)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -1996,18 +1947,14 @@ object GreedyNms {
   * long at any real tile size, and the DuckDB oracle recomputes the
   * same table by a DIFFERENT algorithm (two chained window cumsums). */
 case class Sat(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def nullSafeEval(pixs: Any, vs: Any): Any =
     Sat.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData], tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Sat.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
+  override protected def constants = Seq[Any](tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -2058,7 +2005,7 @@ object Sat {
   * touching a tile border can join a neighboring tile's fragment, which
   * is what makes the clump's global phase perimeter-sized. */
 case class ClumpLocal(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
   require(tile.toLong * tile <= (1L << 20),
     s"ClumpLocal supports tiles up to 1024x1024, got $tile")
 
@@ -2068,11 +2015,7 @@ case class ClumpLocal(left: Expression, right: Expression, tile: Int)
     ClumpLocal.eval(pixs.asInstanceOf[ArrayData],
       clss.asInstanceOf[ArrayData], tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = ClumpLocal.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, clss) =>
-      s"${ev.value} = $cls.eval($pixs, $clss, $tile);")
-  }
+  override protected def constants = Seq[Any](tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -2155,7 +2098,7 @@ object ClumpLocal {
   * oracle compare is bit-exact) and divide by n² only for display.
   * Same patch contract as [[Focal3x3]]. */
 case class LapStats(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n", IntegerType, nullable = false),
@@ -2166,11 +2109,7 @@ case class LapStats(left: Expression, right: Expression, tile: Int)
     LapStats.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
       tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = LapStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
+  override protected def constants = Seq[Any](tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -2226,7 +2165,7 @@ object LapStats {
   * Children: (bytes, fmt); nPixels/band are plan-time constants. */
 case class HistEqStats(left: Expression, right: Expression,
     nPixels: Int, band: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n", IntegerType, nullable = false),
@@ -2237,11 +2176,7 @@ case class HistEqStats(left: Expression, right: Expression,
     HistEqStats.eval(bytes.asInstanceOf[Array[Byte]],
       fmt.asInstanceOf[UTF8String], nPixels, band)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = HistEqStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $band);")
-  }
+  override protected def constants = Seq[Any](nPixels, band)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -2300,7 +2235,7 @@ object HistEqStats {
   * parallel and needs no halo. Output: tile² longs, row-major. */
 case class Viewshed(left: Expression, right: Expression, nPixels: Int,
     band: Int, tile: Int)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -2308,11 +2243,7 @@ case class Viewshed(left: Expression, right: Expression, nPixels: Int,
     Viewshed.eval(bytes.asInstanceOf[Array[Byte]],
       fmt.asInstanceOf[UTF8String], nPixels, band, tile)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Viewshed.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $band, $tile);")
-  }
+  override protected def constants = Seq[Any](nPixels, band, tile)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -2392,7 +2323,7 @@ object Viewshed {
   * flip), a window-local definition so windows are independently
   * computable in any order. */
 case class AudioWindowStats(child: Expression, win: Int, winSize: Int)
-  extends UnaryExpression {
+  extends StaticCall1 {
 
   override def dataType: DataType = StructType(Seq(
     StructField("sum_sq", LongType, nullable = false),
@@ -2402,11 +2333,7 @@ case class AudioWindowStats(child: Expression, win: Int, winSize: Int)
   override def nullSafeEval(bytes: Any): Any =
     AudioWindowStats.eval(bytes.asInstanceOf[Array[Byte]], win, winSize)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = AudioWindowStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $win, $winSize);")
-  }
+  override protected def constants = Seq[Any](win, winSize)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -2438,7 +2365,7 @@ object AudioWindowStats {
   * for a windowed-sinc but keeps this exact shape: per-row, linear,
   * no shuffle, output length n/k). */
 case class DecimateS16(child: Expression, k: Int)
-  extends UnaryExpression {
+  extends StaticCall1 {
 
   require(k > 0, s"decimation factor must be positive, got $k")
 
@@ -2447,11 +2374,7 @@ case class DecimateS16(child: Expression, k: Int)
   override def nullSafeEval(bytes: Any): Any =
     DecimateS16.eval(bytes.asInstanceOf[Array[Byte]], k)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = DecimateS16.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $k);")
-  }
+  override protected def constants = Seq[Any](k)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -2477,7 +2400,7 @@ object DecimateS16 {
   * AND sample order (the q73 round-trip trick), so composing it over
   * DecimateS16 pins the re-encoded payload bit-for-bit under the SQL
   * oracle. */
-case class ClipStatsS16(child: Expression) extends UnaryExpression {
+case class ClipStatsS16(child: Expression) extends StaticCall1 {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n", IntegerType, nullable = false),
@@ -2487,12 +2410,6 @@ case class ClipStatsS16(child: Expression) extends UnaryExpression {
 
   override def nullSafeEval(bytes: Any): Any =
     ClipStatsS16.eval(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = ClipStatsS16.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes);")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -2527,7 +2444,7 @@ object ClipStatsS16 {
   * the pigeonhole-banded matcher (hammingPairs) finds them with exact
   * recall. All-integer, so the DuckDB oracle rebuilds it bit-for-bit. */
 case class AudioFingerprint(child: Expression, winSize: Int, nWin: Int)
-  extends UnaryExpression {
+  extends StaticCall1 {
 
   require(nWin > 0 && nWin <= 64, s"fingerprint needs 1..64 windows, got $nWin")
 
@@ -2536,11 +2453,7 @@ case class AudioFingerprint(child: Expression, winSize: Int, nWin: Int)
   override def nullSafeEval(bytes: Any): Any =
     AudioFingerprint.eval(bytes.asInstanceOf[Array[Byte]], winSize, nWin)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = AudioFingerprint.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $winSize, $nWin);")
-  }
+  override protected def constants = Seq[Any](winSize, nWin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -2710,17 +2623,12 @@ object Sh3Set {
   * duplicate-free ([[Sh3Set]] emits exactly that); violating either
   * undercounts, so the only producers are the sorted-set expressions. */
 case class SortedInterSize(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends StaticCall2 {
 
   override def dataType: DataType = IntegerType
 
   override def nullSafeEval(a: Any, b: Any): Any =
     SortedInterSize.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = SortedInterSize.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $cls.eval($a, $b);")
-  }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
@@ -2754,17 +2662,12 @@ object SortedInterSize {
   * trailing spaces yield empty tokens (code 0), empty text is one
   * empty token. */
 case class SimHash16(child: Expression)
-  extends UnaryExpression {
+  extends StaticCall1 {
 
   override def dataType: DataType = LongType
 
   override def nullSafeEval(t: Any): Any =
     SimHash16.eval(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = SimHash16.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $cls.eval($t);")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -2824,17 +2727,12 @@ object SimHash16 {
   * trailing spaces yield empty tokens). Gram key = tokens joined by
   * U+001F (unit separator); injective on any corpus whose tokens don't
   * contain control characters. */
-case class RepStats(child: Expression) extends UnaryExpression {
+case class RepStats(child: Expression) extends StaticCall1 {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
   override def nullSafeEval(t: Any): Any =
     RepStats.eval(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = RepStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $cls.eval($t);")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,12 +1,11 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for registered queries to files:
   * `sbt "runMain graft.tools.ExplainQuery <outDir> <sfDir> <name>..."`
   * (no names = every registered query). Session shape matches the
-  * sweep's (local[SPARK_GRAFT_CPUS], shuffle.partitions = cpus) so the
+  * sweep's (`graft.Sessions`: shuffle.partitions = cores) so the
   * committed plans describe what the driver's bench actually executes.
   * Iterative queries plan their loop frames at run time; for those the
   * dump is the FINAL returned frame's plan (the loop's per-round shape
@@ -15,13 +14,7 @@ object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "plans/r06"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     Files.createDirectories(Paths.get(outDir))
     val all = graft.SparkEntry.queries
     val names = if (args.length > 2) args.drop(2).toSeq else all.keys.toSeq.sorted

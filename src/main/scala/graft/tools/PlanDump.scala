@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 import graft.engine.Headline
 
@@ -121,13 +120,8 @@ object PlanDump {
   // header and pinned by SimplifySpec's convergence-vs-scalar-DP test.
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(cores = 4,
+      conf = Map("spark.sql.adaptive.enabled" -> "false"))
 
     val sb = new StringBuilder
     sb ++= "# PLANS — physical plan audit (explain formatted)\n\n"
