@@ -128,8 +128,12 @@ object Checkpoint {
   /** Lineage truncation for iterative/two-phase operators: a RELIABLE
     * checkpoint when the session has a checkpoint dir (on a real
     * cluster a localCheckpoint dies with any executor, killing a long
-    * run), else localCheckpoint (single-JVM test/bench mode). Shared by
-    * Expand and StableRowId so the reliability policy lives once. */
+    * run), else localCheckpoint (single-JVM test/bench mode). Callers:
+    * [[Fixpoint]] (the loop frame of Expand, PageRank, MinPlus,
+    * Propagate.pointerDouble and Simplify.dpRounds), Expand's adopted
+    * cells, the static inputs of Components, PageRank, PrefixSum and
+    * GroupRank, Propagate.sumRoundsFunctional's doubling chain, and the
+    * reused frames of the TextOps and Spatial queries. */
   def truncate(s: SparkSession, df: DataFrame): DataFrame =
     // Re-leaf: checkpoint keeps the child plan's STATS even though it
     // truncates lineage, so iterative callers would compound the

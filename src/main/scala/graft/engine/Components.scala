@@ -117,11 +117,6 @@ object Components {
       seeded.groupBy("node_id").agg(min("lbl").as("lbl")))
     var changed = 1L
     var rounds = 0
-    // convergence is detected by an accumulator counted DURING the
-    // localCheckpoint job instead of a separate count action per block;
-    // task retries can only over-count, which at worst runs one extra
-    // (monotone no-op) block
-    val changedAcc = s.sparkContext.longAccumulator(s"${name}_changed")
     // With the per-round pointer-jumping shortcut below, convergence is
     // O(log component-diameter) rounds; fail LOUDLY rather than emit
     // silently-wrong clusters if a pathological graph exceeds the cap
@@ -199,20 +194,14 @@ object Components {
         // the checkpoint dir without bound across the loop. Losing an
         // executor instead recomputes a SMALL frame (edge-incident
         // labels) from the reliably-checkpointed edges — a bounded,
-        // cheap recovery.
-        val before = changedAcc.value
-        val sel = cur.select("node_id", "lbl0", "lbl")
-        // generic over the id type: boxed Long and String both
-        // implement Comparable, and the row passes through unchanged
-        val counted = sel.mapPartitions { it =>
-          it.map { r =>
-            if (r.get(2).asInstanceOf[Comparable[Any]]
-              .compareTo(r.get(1)) < 0) changedAcc.add(1L)
-            r
-          }
-        }(Encoders.row(sel.schema))
-        val next = counted.localCheckpoint(true)
-        changed = changedAcc.value - before
+        // cheap recovery. Convergence is counted during that job
+        // (Fixpoint.counted); generic over the id type: boxed Long and
+        // String both implement Comparable.
+        val (next, n) = Fixpoint.counted(s, cur.select("node_id", "lbl0",
+            "lbl"), s"${name}_changed")(_.localCheckpoint(true)) { r =>
+          r.get(2).asInstanceOf[Comparable[Any]].compareTo(r.get(1)) < 0
+        }
+        changed = n
         labels = next.drop("lbl0")
       }
     } finally s.conf.set("spark.sql.shuffle.partitions", defaultParts)

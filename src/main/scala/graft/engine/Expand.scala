@@ -23,12 +23,9 @@ import graft.world.WorldSpec
   *
   * Scale design: each step is 8 derived-key equi-joins expressed as one
   * explode+join (shuffle on cell id, broadcast of the 8-offset table),
-  * never a theta/range join; lineage is truncated every iteration —
-  * with a RELIABLE checkpoint when the session has a checkpoint dir
-  * (on a real cluster a localCheckpoint dies with any executor,
-  * killing a long fixed-point run), falling back to localCheckpoint
-  * otherwise (single-JVM test/bench mode); convergence = zero adopted
-  * cells (a count on the adopted side only, not the full frame).
+  * never a theta/range join; the loop and its lineage truncation are
+  * [[Fixpoint.iterate]]'s; convergence = zero adopted cells, counted by
+  * [[Fixpoint.counted]] on the adopted side only, not the full frame.
   */
 object Expand {
   import Checkpoint.truncate
@@ -58,82 +55,48 @@ object Expand {
     // the adaptive re-planner does not see the captured partitioning
     // and re-exchanges — correct either way, just one exchange cheaper
     // without AQE.
-    var cur = truncate(s, cls.select(col("cell_id"),
+    val init = truncate(s, cls.select(col("cell_id"),
       col("final_class").cast("long").as("final_class"))
       .repartition(col("cell_id")))
-    var iters = 0
-    var converged = false
-    // Adoption is detected by an accumulator counted DURING adoptedT's
-    // materialization instead of a separate count() action per round
-    // (the Components convergence discipline — one driver action fewer
-    // per round). Exactness: only the zero/nonzero bit is consumed, and
-    // that bit is retry-immune — the adopted partitions are
-    // deterministic (a min-aggregate over deterministic inputs), so any
-    // task attempt that counted a row saw a row the committed partition
-    // also contains; over-counting can inflate the magnitude, never
-    // turn an empty round nonzero.
-    val adoptAcc = s.sparkContext.longAccumulator("expand_adopted")
-    while (iters < maxIters && !converged) {
-      val uncertain = cur.filter(col("final_class") === 0)
-        .select(col("cell_id"),
-          (floor((col("cell_id") - 1) / C) + 1).as("row"),
-          ((col("cell_id") - 1) % C + 1).as("col"))
-      val nbr = uncertain.crossJoin(offDF)
-        .filter((col("row") + col("dr")).between(1, spec.rows) &&
-          (col("col") + col("dc")).between(1, C))
-        .select(col("cell_id"),
-          ((col("row") + col("dr") - 1) * C + col("col") + col("dc"))
-            .cast("long").as("nbr_id"))
-      val adopted = nbr
-        .join(cur.filter(col("final_class") > 0)
-            .select(col("cell_id").as("nbr_id"),
-              col("final_class").as("nbr_class")),
-          Seq("nbr_id"))
-        .groupBy("cell_id").agg(min("nbr_class").as("adopted"))
-      val before = adoptAcc.value
-      val counted = adopted.mapPartitions { it =>
-        it.map { r => adoptAcc.add(1L); r }
-      }(org.apache.spark.sql.Encoders.row(adopted.schema))
-      val adoptedT = truncate(s, counted)
-      if (adoptAcc.value == before) converged = true
-      else {
-        val folded = cur.join(adoptedT, Seq("cell_id"), "left")
-          .select(col("cell_id"),
-            when(col("final_class") === 0, coalesce(col("adopted"), lit(0L)))
-              .otherwise(col("final_class")).as("final_class"))
-        // truncate every OTHER round: cur is referenced three times per
-        // round (uncertain, positive neighbors, fold join), so one
-        // deferred level costs re-reading materialized leaves a few
-        // extra times — cheap — while halving the loop's eager
-        // checkpoint actions; deeper deferral would compound 3^k
-        // references, hence never more than one level
-        cur = if (iters % 2 == 1 || iters == maxIters - 1) truncate(s, folded)
-              else folded
-        iters += 1
-      }
-    }
-    if (requireConvergence && !converged) {
-      // one more adoption probe would be needed to distinguish "budget
-      // landed exactly on the fixed point" from "still adopting"; the
-      // loop above already exits with converged=true in the former case
-      // only when a zero-adoption round ran, so probe explicitly.
-      val uncertain = cur.filter(col("final_class") === 0)
-        .select(col("cell_id"),
-          (floor((col("cell_id") - 1) / C) + 1).as("row"),
-          ((col("cell_id") - 1) % C + 1).as("col"))
-      val nbr = uncertain.crossJoin(offDF)
-        .filter((col("row") + col("dr")).between(1, spec.rows) &&
-          (col("col") + col("dc")).between(1, C))
-        .select(((col("row") + col("dr") - 1) * C + col("col") + col("dc"))
+    // (uncertain cell, in-grid neighbor id) candidates and the positive
+    // cells they may adopt from: shared by the round and the probe
+    def nbrs(cur: DataFrame): DataFrame = cur.filter(col("final_class") === 0)
+      .select(col("cell_id"),
+        (floor((col("cell_id") - 1) / C) + 1).as("row"),
+        ((col("cell_id") - 1) % C + 1).as("col"))
+      .crossJoin(offDF)
+      .filter((col("row") + col("dr")).between(1, spec.rows) &&
+        (col("col") + col("dc")).between(1, C))
+      .select(col("cell_id"),
+        ((col("row") + col("dr") - 1) * C + col("col") + col("dc"))
           .cast("long").as("nbr_id"))
-      val wouldAdopt = nbr.join(cur.filter(col("final_class") > 0)
-          .select(col("cell_id").as("nbr_id")), Seq("nbr_id"))
+    def positive(cur: DataFrame): DataFrame = cur
+      .filter(col("final_class") > 0)
+      .select(col("cell_id").as("nbr_id"), col("final_class").as("nbr_class"))
+    val (expanded, iters) = Fixpoint.iterate(s, init, maxIters) { cur =>
+      val adopted = nbrs(cur).join(positive(cur), Seq("nbr_id"))
+        .groupBy("cell_id").agg(min("nbr_class").as("adopted"))
+      // adoption is counted during adoptedT's own truncation job: the
+      // adopted partitions are a min-aggregate over deterministic
+      // inputs, so the zero/nonzero bit is retry-immune
+      val (adoptedT, n) = Fixpoint.counted(s, adopted, "expand_adopted")(
+        truncate(s, _))(_ => true)
+      if (n == 0) None
+      else Some(cur.join(adoptedT, Seq("cell_id"), "left")
+        .select(col("cell_id"),
+          when(col("final_class") === 0, coalesce(col("adopted"), lit(0L)))
+            .otherwise(col("final_class")).as("final_class")))
+    }
+    // a budget that ran out while every round still adopted may have
+    // landed exactly on the fixed point: probe one more round
+    if (requireConvergence && iters == maxIters) {
+      val wouldAdopt = nbrs(expanded).join(positive(expanded), Seq("nbr_id"))
         .limit(1).count()
       require(wouldAdopt == 0,
         s"Expand did not reach its fixed point within maxIters=$maxIters " +
           "rounds (cells would still adopt); raise the budget or use " +
           "requireConvergence=false for fixed-distance semantics")
     }
-    cur.withColumn("iters", lit(iters))
+    expanded.withColumn("iters", lit(iters))
   }
 }

@@ -22,17 +22,16 @@ import org.apache.spark.sql.functions._
   *   1. ranks ⋈ edges on src (co-partitioned after the first pass),
   *   2. groupBy(dst) partial-aggregated sum of contributions,
   *   3. dangling mass folded in via a one-row cross join (broadcast).
-  * Lineage is truncated per iteration ([[Checkpoint.truncate]]) so k
-  * iterations never re-plan a k-deep join tree — the q56 connected-
-  * components loop discipline.
+  * The iterations run on [[Fixpoint.rounds]], which owns the lineage
+  * truncation cadence.
   */
 object PageRank {
 
   /** @param edges (src: long, dst: long), self-loop-free and distinct
     * @param nodes (node: long), the full vertex set
     * @param iters fixed iteration count (deterministic, no convergence
-    *              races — callers wanting convergence add the accumulator
-    *              probe the q56 loop uses)
+    *              races — callers wanting convergence use
+    *              [[Fixpoint.iterate]] with a [[Fixpoint.counted]] probe)
     * @return (node, r) — rank in micro-units after `iters` rounds */
   def run(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
     val s = edges.sparkSession
@@ -55,8 +54,8 @@ object PageRank {
         .select(col("src"), col("dst"), col("outdeg")))
     val dangNodes = Checkpoint.truncate(s,
       deg.filter(col("outdeg") === 0).select(col("node")))
-    var ranks = nodes.select(col("node"), lit(1000000L).as("r"))
-    for (i <- 1 to iters) {
+    val init = nodes.select(col("node"), lit(1000000L).as("r"))
+    Fixpoint.rounds(s, init, iters) { ranks =>
       val contrib = ranks
         .join(edgesDeg, col("node") === col("src"))
         .select(col("dst"),
@@ -65,20 +64,11 @@ object PageRank {
       val dang = ranks.join(dangNodes, Seq("node"), "left_semi")
         .agg(coalesce(sum("r"), lit(0L)).as("ds"))
         .select(expr(s"(ds * 85) div (100 * $nV)").as("share"))
-      val next = nodes.join(contrib, Seq("node"), "left")
+      nodes.join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(dang))
         .select(col("node"),
           (lit(150000L) + coalesce(col("cs"), lit(0L)) + col("share"))
             .as("r"))
-      // truncate every OTHER iteration: ranks is referenced twice per
-      // iteration (contrib + dangling), so one un-truncated level costs
-      // at most a double evaluation of one small join over materialized
-      // leaves, while halving the eager checkpoint jobs of the loop;
-      // deeper un-truncated nesting would compound 2^k references,
-      // hence never more than one deferred level
-      ranks = if (i % 2 == 0 || i == iters) Checkpoint.truncate(s, next)
-              else next
     }
-    ranks
   }
 }

@@ -2401,8 +2401,8 @@ object Spatial {
   //
   // q127 FLOW ACCUMULATION: upstream-cell count per cell over the D8
   // drainage DAG (strict descent guarantees acyclicity), as k=8
-  // synchronous rounds of engine/Propagate.sumRounds — a'(v) = 1 +
-  // SUM over in-edges of a(u), counting cells within 8 hops upstream
+  // synchronous rounds (engine/Propagate.sumRoundsFunctional) — a'(v) =
+  // 1 + SUM over in-edges of a(u), counting cells within 8 hops upstream
   // (the fixed round count is the operator contract; GraphGeoSpec runs
   // the kernel TO convergence against a scalar exact count). Integer
   // sums are order-free under any partitioning; the oracle unrolls the

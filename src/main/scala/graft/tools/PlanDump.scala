@@ -84,13 +84,15 @@ object PlanDump {
   // driver-side like q88/q109's refinement passes and share the same
   // one-partial-aggregated-exchange shape, documented in KMeans's
   // header and pinned by KMeansSpec.
-  // q122 is omitted like q115/q119: each MinPlus round ends in a
-  // Checkpoint.truncate, so the registered plan is a scan of the final
-  // checkpointed distances — the per-round shape (edge join, then ONE
-  // partial-aggregated MIN over the union of the running frame and the
-  // proposals; no fold-back join) is documented in MinPlus's header and
-  // pinned by GraphGeoSpec's partitioning-invariance test. q127/q128 are
-  // omitted for the same reason (Propagate loops truncate); q126 IS
+  // q122 is omitted like q115/q119: MinPlus runs on Fixpoint.rounds,
+  // whose last round always ends in a Checkpoint.truncate, so the
+  // registered plan is a scan of the final checkpointed distances — the
+  // per-round shape (edge join, then ONE partial-aggregated MIN over
+  // the union of the running frame and the proposals; no fold-back
+  // join) is documented in MinPlus's header and pinned by GraphGeoSpec's
+  // partitioning-invariance test. q127/q128 are omitted for the same
+  // reason (q128's pointerDouble runs on Fixpoint.rounds; q127's path
+  // doubling truncates its chain before every doubling join); q126 IS
   // dumped — its zero-shuffle single-projection D8 pick is the
   // audit-worthy shape.
   // q109 is omitted like q88: its registered DataFrame is the
@@ -104,20 +106,21 @@ object PlanDump {
   // interesting plans are the per-pass groupBy histograms, whose
   // shuffle-bin-counts-not-values shape is documented in Quantile's
   // header and exercised by QuantileSpec.
-  // q115 is omitted: each PageRank iteration ends in a
-  // Checkpoint.truncate, so the registered DataFrame's plan is a bare
-  // scan of the final checkpointed ranks — the interesting per-round
-  // two-shuffle shape (ranks-join-edges, groupBy(dst), broadcast
-  // dangling share) is documented in PageRank's header and pinned by
-  // GraphGeoSpec's partitioning-invariance test.
+  // q115 is omitted: PageRank runs on Fixpoint.rounds, whose last
+  // round always ends in a Checkpoint.truncate, so the registered
+  // DataFrame's plan is a bare scan of the final checkpointed ranks —
+  // the interesting per-round two-shuffle shape (ranks-join-edges,
+  // groupBy(dst), broadcast dangling share) is documented in PageRank's
+  // header and pinned by GraphGeoSpec's partitioning-invariance test.
   // q119 is omitted for the same reason (the Components min-label loop
   // checkpoints, like q56/q78): the registered plan would show only the
   // final hot-join-labels aggregate over a checkpoint scan.
-  // q129 is omitted for the same reason (Simplify.dpRounds truncates
-  // every other split round): the per-round shape — one
-  // partial-aggregated argmax exchange + a broadcast winners join, the
-  // vertex frame itself never exchanged — is documented in Simplify's
-  // header and pinned by SimplifySpec's convergence-vs-scalar-DP test.
+  // q129 is omitted for the same reason (Simplify.dpRounds runs on
+  // Fixpoint.rounds, which truncates after the last split round): the
+  // per-round shape — one partial-aggregated argmax exchange + a
+  // broadcast winners join, the vertex frame itself never exchanged — is
+  // documented in Simplify's header and pinned by SimplifySpec's
+  // convergence-vs-scalar-DP test.
 
   def main(args: Array[String]): Unit = {
     val spark = graft.Sessions.local(cores = 4,

@@ -615,7 +615,8 @@ class GraphGeoSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val nodes = spark.range(1, n + 1).toDF("node")
     val edges = out.toSeq.toDF("src", "dst")
-    val conv = graft.engine.Propagate.sumRounds(spark, nodes, edges, maxDepth)
+    val conv = graft.engine.Propagate
+      .sumRoundsFunctional(spark, nodes, edges, maxDepth)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (1L to n.toLong).foreach { v =>
       assert(conv(v) == exact(v), s"converged cell $v: ${conv(v)} != ${exact(v)}")
@@ -654,6 +655,30 @@ class GraphGeoSpec extends AnyFunSuite with BeforeAndAfterAll {
     sinks.foreach(sk => assert(got(sk) == sk, s"sink $sk mislabeled"))
     val sizes = got.values.groupBy(identity).map(_._2.size)
     assert(sizes.count(_ >= 10) > 20, "fixture degenerate: no real basins")
+    // pointerDouble itself on random functional forests (each node
+    // points to a smaller id or to itself): after r doublings every
+    // node sits min(2^r, depth) steps down its chain
+    import org.scalacheck.Gen
+    import spark.implicits._
+    val forests = for {
+      n <- Gen.choose(1, 80)
+      ptr <- Gen.sequence[Seq[Long], Long]((0 until n).map(i =>
+        Gen.frequency(1 -> Gen.const(i.toLong),
+          4 -> Gen.choose(0L, math.max(0, i - 1).toLong))))
+      rounds <- Gen.choose(0, 5)
+    } yield (ptr, rounds)
+    (1 to 5).map(i => forests.pureApply(Gen.Parameters.default,
+        org.scalacheck.rng.Seed(i.toLong))).foreach { case (ptr, rounds) =>
+      val ptr0 = ptr.zipWithIndex.map { case (p, v) => (v.toLong, p) }
+        .toDF("node", "p")
+      val got = graft.engine.Propagate.pointerDouble(spark, ptr0, rounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val expect = ptr.indices.map { v =>
+        v.toLong -> Iterator.iterate(v.toLong)(c => ptr(c.toInt))
+          .drop(1 << rounds).next()
+      }.toMap
+      assert(got == expect, s"pointers $ptr, rounds $rounds")
+    }
   }
 
   // ---- q113 polygon metrics -------------------------------------------------

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Cart, Codec, Geom}
-import graft.engine.{Checkpoint, Expand, Pipeline, Rasterize, Salted}
+import graft.engine.{Checkpoint, Expand, Fixpoint, Pipeline, Rasterize,
+  Salted}
 import graft.world.World
 
 /** End-to-end Spark tests: the golden oracle (a plain-Scala
@@ -33,6 +34,37 @@ class SparkEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
+
+  /** Inputs drawn from `gen` under fixed seeds: a property checked on
+    * the same generated cases every run. */
+  private def samples[T](gen: org.scalacheck.Gen[T]): Seq[T] =
+    (1 to 5).map(i => gen.pureApply(org.scalacheck.Gen.Parameters.default,
+      org.scalacheck.rng.Seed(i.toLong)))
+
+  /** Spark jobs `body` starts, seen by a listener scoped to one job
+    * group (the listener bus is shared with the rest of the suite). */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            group == js.properties.getProperty("spark.jobGroup.id"))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count")
+      body
+    } finally {
+      sc.clearJobGroup()
+      org.apache.spark.GraftSparkBridge.waitListenerEmpty(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
 
   // ---- the plain-Scala golden oracle (R:191-411 semantics) --------------
 
@@ -501,6 +533,83 @@ class SparkEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val cheb = math.max((id - 1) / 16, (id - 1) % 16)
       assert(got(id) == (if (cheb <= 2) 3L else 0L), s"cell $id")
     }
+    // the same closed form on random seed sets: an uncertain cell at
+    // Chebyshev distance d <= maxIters from its nearest seeds takes the
+    // minimum of their classes, one beyond stays 0; iters counts the
+    // rounds that adopted, min(maxIters, farthest cell's distance)
+    import org.scalacheck.Gen
+    val seedSets = Gen.zip(
+      Gen.nonEmptyListOf(Gen.zip(Gen.choose(1L, mini.nCells),
+        Gen.choose(1L, 5L))).map(_.take(6).toMap),
+      Gen.choose(0, 5))
+    def cheb(a: Long, b: Long): Long =
+      math.max(math.abs((a - 1) / 16 - (b - 1) / 16),
+        math.abs((a - 1) % 16 - (b - 1) % 16))
+    for ((seeds, maxIters) <- samples(seedSets)) {
+      val seeded = seeds.toSeq.toDF("cell_id", "final_class")
+      val grid = spark.range(1, mini.nCells + 1).toDF("cell_id")
+        .join(seeded, Seq("cell_id"), "left")
+        .select(col("cell_id"), coalesce(col("final_class"), lit(0L))
+          .as("final_class"))
+      val out = Expand.run(spark, mini, grid, maxIters,
+        requireConvergence = false).collect()
+      val dist = (1L to mini.nCells).map { id =>
+        id -> seeds.keys.map(cheb(id, _)).min
+      }.toMap
+      val expect = (1L to mini.nCells).map { id =>
+        val d = dist(id)
+        id -> (if (d > maxIters) 0L
+               else seeds.collect { case (c, k) if cheb(id, c) == d => k }.min)
+      }.toMap
+      val case_ = s"seeds $seeds, maxIters $maxIters"
+      assert(out.map(r => r.getLong(0) -> r.getLong(1)).toMap == expect,
+        case_)
+      assert(out.map(_.getInt(2)).toSet ==
+        Set(math.min(maxIters.toLong, dist.values.max).toInt), case_)
+    }
+  }
+
+  test("Fixpoint: truncates after every second round and the last, a " +
+    "step returning None ends the loop uncounted, and counted tallies " +
+    "matches inside the materialising job") {
+    import spark.implicits._
+    val base = spark.range(8).toDF("x")
+    val step = (f: DataFrame) => f.select((col("x") + 1).as("x"))
+    def xs(f: DataFrame) = f.as[Long].collect().sorted.toSeq
+    // one truncation's jobs: 1 with localCheckpoint, more once a
+    // reliable checkpoint dir is set on the shared session
+    val perTruncate = jobsIn(Checkpoint.truncate(spark, base))
+    assert(perTruncate >= 1)
+    for (n <- 1 to 5) {
+      var out: DataFrame = null
+      val jobs = jobsIn { out = Fixpoint.rounds(spark, base, n)(step) }
+      assert(jobs == (n + 1) / 2 * perTruncate, s"n = $n")
+      assert(xs(out) == (n until n + 8))
+    }
+    // a None at round k: k - 1 rounds counted, truncations only at the
+    // even rounds before it (maxRounds = 10 is never reached)
+    for (k <- 1 to 5) {
+      var out: (DataFrame, Int) = null
+      var calls = 0
+      val jobs = jobsIn {
+        out = Fixpoint.iterate(spark, base, 10) { f =>
+          calls += 1
+          if (calls == k) None else Some(step(f))
+        }
+      }
+      assert(out._2 == k - 1 && calls == k, s"k = $k")
+      assert(jobs == (k - 1) / 2 * perTruncate, s"k = $k")
+      assert(xs(out._1) == (k - 1 until k + 7))
+    }
+    assert(Fixpoint.iterate(spark, base, 3)(f => Some(step(f)))._2 == 3)
+    var counted: (DataFrame, Long) = null
+    val jobs = jobsIn {
+      counted = Fixpoint.counted(spark, spark.range(100).toDF("x"),
+        "test_counted")(_.localCheckpoint(true))(_.getLong(0) % 3 == 0)
+    }
+    assert(jobs == 1)
+    assert(counted._2 == 34)
+    assert(counted._1.count() == 100)
   }
 
   test("expand with a RELIABLE checkpoint dir set produces the same " +
@@ -1038,6 +1147,34 @@ class SparkEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .minLabel(spark, edges.toDF("p", "q"), "test_cc_seeded")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expect)
+    // the same ground truth on random graphs, with long ids and with
+    // string ids (whose lexical order differs from the numeric: "v10" <
+    // "v9")
+    def unionFind[T](es: Seq[(T, T)])(implicit o: Ordering[T]): Map[T, T] = {
+      val up = scala.collection.mutable.Map[T, T]()
+      def root(x: T): T = { var r = x; while (up(r) != r) r = up(r); r }
+      es.foreach { case (a, b) =>
+        up.getOrElseUpdate(a, a); up.getOrElseUpdate(b, b)
+        val (ra, rb) = (root(a), root(b))
+        if (ra != rb) { if (o.lt(ra, rb)) up(rb) = ra else up(ra) = rb }
+      }
+      up.keys.map(n => n -> root(n)).toMap
+    }
+    import org.scalacheck.Gen
+    val graphs = Gen.choose(2L, 120L).flatMap { n =>
+      Gen.nonEmptyListOf(Gen.zip(Gen.choose(0L, n), Gen.choose(0L, n)))
+    }.map(_.filter { case (a, b) => a != b }).suchThat(_.nonEmpty)
+    for (es <- samples(graphs)) {
+      val longs = graft.engine.Components
+        .minLabel(spark, es.toDF("p", "q"), "test_cc_gen")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(longs == unionFind(es), s"edges $es")
+      val ss = es.map { case (a, b) => (s"v$a", s"v$b") }
+      val strs = graft.engine.Components
+        .minLabel(spark, ss.toDF("p", "q"), "test_cc_gen_str")
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(strs == unionFind(ss), s"edges $ss")
+    }
   }
 
   test("grid_h3 expression matches H3Lite; res-4 parent bit math nests") {
